@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.engine.BacktestEngine
-import graft.opt.{GridSearch, LocalMACross}
+import graft.opt.GridSearch
 import graft.sim.Similarity
 import graft.sources.Sources
 import graft.strategy.MACross
@@ -32,8 +32,8 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the full backtest lifecycle (SURVEY.md §3.1) over the events
-    * table mapped to bars: signal windows → per-ticker order fold →
-    * net-worth windows.
+    * table mapped to bars: per-ticker signal rule → per-ticker order
+    * fold → net-worth windows.
     */
   def entry(spark: SparkSession): DataFrame = {
     val bars = Sources.eventsAsBars(spark, "/root/testdata/sf0.001")
@@ -1829,7 +1829,7 @@ object SparkEntry {
       val bars = Sources.eventsAsBars(s, dir)
         .filter(col("ticker").isin("u1", "u2", "u3"))
       GridSearch.best(GridSearch.evaluate(bars,
-          st => LocalMACross(st(0).toInt, st(1).toInt), 10000.0,
+          st => MACross(st(0).toInt, st(1).toInt), 10000.0,
           Seq((3, 9, 2), (10, 30, 10))))
         .select(col("ticker"), col("best_net_worth"))
         .orderBy(col("ticker"))
@@ -1854,7 +1854,7 @@ object SparkEntry {
           col("ts").as("date"), col("value").as("close"))
       GridSearch.findCommonStocks(docs, "text", tickers, "symbol",
           Seq("spy"), 3, loadBars,
-          st => LocalMACross(st(0).toInt, st(1).toInt), 10000.0,
+          st => MACross(st(0).toInt, st(1).toInt), 10000.0,
           Seq((3, 9, 2), (10, 30, 10)),
           // session-memoized grid fold (the bt tier's shared-fold
           // discipline): the tag pins the corpus/bars source (dir +

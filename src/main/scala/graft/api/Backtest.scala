@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.{broadcast, col, concat, lit}
 
 import graft.analytics.Metrics
 import graft.engine.{BacktestEngine, BacktestResult}
-import graft.opt.{GridSearch, LocalStrategy, SimulatedAnnealing}
-import graft.strategy.Strategy
+import graft.opt.{GridSearch, SimulatedAnnealing}
+import graft.strategy.{StepStrategy, Strategy}
 import graft.text.TextPipeline
 
 /** Ergonomic facade mirroring the reference's public API
@@ -103,7 +103,7 @@ final class Backtest(
     * temperature T and iteration count as in optimize.py:138-207; seeded
     * here for determinism).
     */
-  def optimize(mkStrategy: Seq[Double] => LocalStrategy,
+  def optimize(mkStrategy: Seq[Double] => StepStrategy,
       ranges: Seq[(Double, Double, Double)],
       optType: String = "grid_search",
       initState: Array[Double] = Array(1.0, 1.0),
@@ -135,7 +135,7 @@ final class Backtest(
     */
   def optimizeCommonStocks(sources: Seq[DataFrame], textCols: Seq[String],
       tickers: DataFrame, tickerCol: String, blacklist: Seq[String], k: Int,
-      mkStrategy: Seq[Double] => LocalStrategy,
+      mkStrategy: Seq[Double] => StepStrategy,
       ranges: Seq[(Double, Double, Double)],
       optType: String = "grid_search",
       initState: Array[Double] = Array(1.0, 1.0),

@@ -38,9 +38,12 @@ final case class BacktestResult(daily: DataFrame, orders: Dataset[OrderRow],
   *
   * Spark-first decomposition of the reference's eager pandas flow:
   *
-  *  1. `strategy.signals` — vectorized window/column logic, fully visible
-  *     to Catalyst (predicate pushdown + whole-stage codegen); output is
-  *     the *sparse* set of trade-decision rows.
+  *  1. `strategy.signals` — the *sparse* set of trade-decision rows. A
+  *     built-in strategy (graft.strategy.StepStrategy) steps its one
+  *     per-ticker rule over each ticker's bars after a single
+  *     `groupByKey(ticker)` shuffle; the in-task optimizer and the
+  *     streaming path step the same rule. A user strategy may be any
+  *     DataFrame logic.
   *  2. the order fold — `groupByKey(ticker).flatMapGroups` over signal rows
   *     only (O(#trades) state per ticker, not O(#bars)), running the
   *     path-dependent book of graft.engine.TradingSession. Tickers
@@ -107,10 +110,10 @@ object BacktestEngine {
     }
   }
 
-  /** Drive a TradingSession over ordered signal bars — shared verbatim by
-    * the batch fold above, the streaming fold
-    * (graft.streaming.StreamingBacktest), and the in-task evaluator used
-    * by the optimizer (graft.opt.LocalBacktest).
+  /** Drive a TradingSession over ordered signal bars — shared by the
+    * batch fold above and the in-task evaluator of the optimizer
+    * (graft.opt.LocalBacktest); the streaming fold
+    * (graft.streaming.StreamingBacktest) makes the same calls per row.
     */
   def runSession(ticker: String, rows: Array[SignalBar],
       initialAmount: Double): FoldOut = {
@@ -169,6 +172,8 @@ object BacktestEngine {
     * inf − inf after selling an inf-share order) as MISSING — replaced
     * by the previous value. Both are replicated here; finite series
     * are unaffected (verified: golden aapl floats bit-identical).
+    * graft.opt.LocalBacktest walks the same rule over one ticker's
+    * arrays for the optimizer.
     */
   def withNetWorth(daily: DataFrame, trades: DataFrame,
       initialAmount: Double): DataFrame = {

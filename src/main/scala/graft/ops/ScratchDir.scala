@@ -1,45 +1,19 @@
 package graft.ops
 
-/** Shuffle/scratch-device selection for the session builders.
+/** Shuffle/scratch-directory selection for the session builders.
   *
-  * Measured (r17, HotFrames sampler on mm_gif89a_frames at local[32]):
-  * executor threads spent the bulk of their RUNNABLE time in
-  * `FileOutputStream.open0` / `FileChannelImpl.map0/unmap0` /
-  * `UnixFileSystem.delete0` on shuffle part files, and BLOCKED in
-  * `IndexShuffleBlockResolver.writeMetadataFileAndCommit` — shuffle
-  * scratch I/O on the sandbox's ext4 root device, not compute, was
-  * the 32-way wall (per-task run time inflated ~8× between 16 and 32
-  * concurrent tasks; moving scratch to tmpfs cut ts_pii_redact
-  * 0.65→0.31 s and mm_jpeg_decode 0.65→0.33 s at identical plans).
-  *
-  * This is the guide-§9 "machines with fast local disks" premise: a
-  * production deployment puts `spark.local.dir` on local NVMe; the
-  * sandbox's only fast device is tmpfs. Selection order:
-  *
-  *  1. `$SPARK_GRAFT_LOCAL_DIR` — explicit override, used verbatim
-  *     (set it to a disk-backed path for runs whose shuffle exceeds
-  *     memory);
-  *  2. `/dev/shm/spark-graft-scratch` when writable — the zero-config
-  *     fast default (shuffle volume at bench scale is MBs against a
-  *     126 GiB tmpfs);
-  *  3. none — Spark's own default (java.io.tmpdir).
+  * `$SPARK_GRAFT_LOCAL_DIR`, when set, becomes `spark.local.dir` verbatim
+  * (point it at fast local storage — NVMe, or tmpfs when the shuffle
+  * volume is known to fit in memory). Unset, Spark's own default
+  * (java.io.tmpdir) stands: a memory-backed default would silently spend
+  * RAM on every shuffle and only pays off on some hosts.
   */
 object ScratchDir {
-  def resolve(): Option[String] = {
+  def resolve(): Option[String] =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").map(_.trim).filter(_.nonEmpty)
-      .orElse {
-        val cand = new java.io.File("/dev/shm/spark-graft-scratch")
-        try {
-          cand.mkdirs()
-          val probe = java.io.File.createTempFile("probe", "", cand)
-          probe.delete()
-          Some(cand.getAbsolutePath)
-        } catch { case _: Throwable => None }
-      }
-  }
 
-  /** Apply to a session builder: sets spark.local.dir when a fast
-    * scratch device resolved, no-op otherwise.
+  /** Apply to a session builder: sets spark.local.dir when a scratch
+    * directory is configured, no-op otherwise.
     */
   def tune(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =

@@ -2,133 +2,59 @@ package graft.opt
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{BacktestEngine, TradingSession}
-import graft.model.SignalBar
+import graft.engine.BacktestEngine
+import graft.model.Time
+import graft.strategy.{StepStrategy, TickerSeries}
 
-/** Task-local strategy evaluation: the signal math re-expressed as plain
-  * Scala over one ticker's arrays so a full backtest can run *inside a
-  * Spark task* (no nested jobs). The arithmetic mirrors the distributed
-  * window path bit-for-bit: Spark's sliding window frame left-folds the
-  * frame rows exactly like the naive sum here, and the fill machinery is
-  * literally the same TradingSession.
+/** In-task backtest: a built-in rule, the engine's session fold and the
+  * engine's net-worth rule over one ticker's arrays, so a full backtest
+  * runs inside a Spark task with no nested job.
   */
-trait LocalStrategy extends Serializable {
-  def signals(ticker: String, dates: Array[Timestamp],
-      closes: Array[Double]): Array[SignalBar]
-}
-
-/** Local MA-cross signals (reference custom_strats.py:36-62 semantics,
-  * identical to graft.strategy.MACross's window formulation).
-  */
-final case class LocalMACross(fast: Int, lagging: Int) extends LocalStrategy {
-  private def sma(closes: Array[Double], n: Int): Array[Double] = {
-    val out = Array.fill(closes.length)(Double.NaN)
-    var i = n - 1
-    while (i < closes.length) {
-      var s = 0.0
-      var ok = true
-      var j = i - n + 1
-      while (j <= i) {
-        if (closes(j).isNaN) ok = false
-        s += closes(j)
-        j += 1
-      }
-      if (ok) out(i) = s / n
-      i += 1
-    }
-    out
-  }
-
-  def signals(ticker: String, dates: Array[Timestamp],
-      closes: Array[Double]): Array[SignalBar] = {
-    val f = sma(closes, fast)
-    val l = sma(closes, lagging)
-    val n = closes.length
-    val cross = Array.tabulate(n)(i => !f(i).isNaN && !l(i).isNaN && f(i) > l(i))
-    val out = Array.newBuilder[SignalBar]
-    var firstBuyIdx = -1
-    var i = 0
-    while (i < n) {
-      val edge = i == 0 || cross(i) != cross(i - 1)
-      if (edge) {
-        if (cross(i)) {
-          if (firstBuyIdx < 0) firstBuyIdx = i
-          out += SignalBar(ticker, dates(i), closes(i), isBuy = true, isSell = false)
-        } else if (firstBuyIdx >= 0 && i > firstBuyIdx) {
-          out += SignalBar(ticker, dates(i), closes(i), isBuy = false, isSell = true)
-        }
-      }
-      i += 1
-    }
-    if (firstBuyIdx < 0) Array.empty else out.result()
-  }
-}
-
-/** Local Ten-Percent signals (reference custom_strats.py:83-101). */
-final case class LocalTenPercent(sellMult: Double = 1.05, buyMult: Double = 0.99)
-    extends LocalStrategy {
-  def signals(ticker: String, dates: Array[Timestamp],
-      closes: Array[Double]): Array[SignalBar] = {
-    if (dates.isEmpty) return Array.empty
-    val out = Array.newBuilder[SignalBar]
-    out += SignalBar(ticker, dates(0), closes(0), isBuy = true, isSell = false)
-    var anchor = 0
-    var lastMoveSell = false
-    var i = 1
-    while (i < dates.length) {
-      val v = closes(i)
-      if (v >= closes(anchor) * sellMult && !lastMoveSell) {
-        out += SignalBar(ticker, dates(i), v, isBuy = false, isSell = true)
-        anchor = i; lastMoveSell = true
-      } else if (v <= closes(anchor) * buyMult && lastMoveSell) {
-        out += SignalBar(ticker, dates(i), v, isBuy = true, isSell = false)
-        anchor = i; lastMoveSell = false
-      }
-      i += 1
-    }
-    out.result()
-  }
-}
-
 object LocalBacktest {
 
-  /** Full local backtest → final net worth. Bars must be date-sorted.
-    * Stop-loss scans see every bar (observeBar over the full series).
-    * The net-worth fold adds terms in date order, matching the pandas
-    * cumsum association (reference strats.py:567-579).
+  /** Final net worth of one ticker's date-sorted bars (null closes as
+    * NaN). The signals and the fill are the engine's own
+    * (StepStrategy.signals, BacktestEngine.runSession); the net worth
+    * walks the bar indices with the NaN-skipping rule of
+    * `BacktestEngine.withNetWorth`: a NaN buy/sell worth is left out of
+    * the running sums, a NaN share snapshot does not replace the
+    * forward-filled count, and the terms add in date order, so the value
+    * equals the engine's last `net_worth` (a null there is NaN here).
     */
   def finalNetWorth(ticker: String, dates: Array[Timestamp],
-      closes: Array[Double], strategy: LocalStrategy,
+      closes: Array[Double], strategy: StepStrategy,
       initialAmount: Double): Double = {
-    val sigs = strategy.signals(ticker, dates, closes)
-    val session = new TradingSession(initialAmount)
-    var si = 0
+    if (dates.isEmpty) return Double.NaN
+    val trades = BacktestEngine.runSession(ticker,
+      strategy.signals(ticker, dates, closes), initialAmount).trades
+    val tradeNanos = trades.map(t => Time.epochNanos(t.date)).toArray
+    var t = 0
+    var owned = 0.0
+    var cumBuy, cumSell, buyWorth, sellWorth = 0.0
     var i = 0
     while (i < dates.length) {
-      while (si < sigs.length && sigs(si).date.equals(dates(i))) {
-        val s = sigs(si)
-        if (s.isBuy) session.buy(s.date, s.close)
-        else if (s.isSell) session.sell(s.date, s.close)
-        si += 1
+      val ns = Time.epochNanos(dates(i))
+      while (t < tradeNanos.length && tradeNanos(t) < ns) t += 1
+      var buy, sell = 0.0
+      // equal dates all join the same trade day, as the engine's join does
+      if (t < tradeNanos.length && tradeNanos(t) == ns) {
+        val d = trades(t)
+        d.shares_owned.filterNot(_.isNaN).foreach(owned = _)
+        buy = d.buy_shares.getOrElse(0.0)
+        sell = d.sell_shares.getOrElse(0.0)
       }
-      session.observeBar(dates(i), closes(i))
+      buyWorth = buy * closes(i)
+      sellWorth = sell * closes(i)
+      if (!buyWorth.isNaN) cumBuy += buyWorth
+      if (!sellWorth.isNaN) cumSell += sellWorth
       i += 1
     }
-    val fold = BacktestEngine.collectFold(ticker, session)
-    val closeAt = dates.zip(closes).toMap
-    var cumBuy = 0.0
-    var cumSell = 0.0
-    fold.trades.foreach { t =>
-      t.buy_shares.foreach(s => cumBuy += s * closeAt(t.date))
-      t.sell_shares.foreach(s => cumSell += s * closeAt(t.date))
-    }
-    val sharesOwned =
-      if (session.orders.sharesOwned.isEmpty) 0.0
-      else session.orders.sharesOwned.maxBy(r => graft.model.Time.epochNanos(r._1))._2
-    sharesOwned * closes.last - cumBuy + cumSell + initialAmount
+    // a NaN term on the last row itself makes its running sum NaN
+    owned * closes.last - (if (buyWorth.isNaN) Double.NaN else cumBuy) +
+      (if (sellWorth.isNaN) Double.NaN else cumSell) + initialAmount
   }
 }
 
@@ -176,7 +102,7 @@ object GridSearch {
     * when tickers are the abundant axis: no duplication, no extra
     * shuffle.
     */
-  def evaluate(bars: DataFrame, mkStrategy: Seq[Double] => LocalStrategy,
+  def evaluate(bars: DataFrame, mkStrategy: Seq[Double] => StepStrategy,
       initialAmount: Double,
       ranges: Seq[(Double, Double, Double)],
       gridChunks: Int = 1): DataFrame = {
@@ -185,35 +111,22 @@ object GridSearch {
     val states = grid(ranges)
     val bcStates = spark.sparkContext.broadcast(states)
     val nChunks = math.max(1, math.min(gridChunks, states.length))
-    // full-precision (epoch nanos) sort key via graft.model.Time —
-    // getTime alone is millisecond-truncated and would tie sub-ms bars
-    val series = bars
-      .select(col("ticker"), col("date").cast("timestamp"), col("close").cast("double"))
-      .as[(String, Timestamp, java.lang.Double)]
-      .groupByKey(_._1)
-      .mapGroups { (ticker, it) =>
-        val sorted = it.toArray.sortBy(r => graft.model.Time.epochNanos(r._2))
-        (ticker, sorted.map(r => graft.model.Time.epochNanos(r._2)),
-          sorted.map(r => if (r._3 == null) Double.NaN else r._3.doubleValue()))
-      }
+    val series = TickerSeries.of(bars)
     val sharded =
-      if (nChunks == 1) series.map { case (t, ns, closes) => (t, ns, closes, 0) }
-      else series.flatMap { case (t, ns, closes) =>
-        (0 until nChunks).iterator.map(c => (t, ns, closes, c))
-      }.repartition(spark.sparkContext.defaultParallelism)
-    sharded.flatMap { case (ticker, ns, closes, chunk) =>
+      if (nChunks == 1) series.map(s => (s, 0))
+      else series.flatMap(s => (0 until nChunks).iterator.map(c => (s, c)))
+        .repartition(spark.sparkContext.defaultParallelism)
+    sharded.flatMap { case (s, chunk) =>
       val all = bcStates.value
-      val dates = ns.map(graft.model.Time.fromEpochNanos)
+      val dates = s.dates
       (chunk until all.length by nChunks).iterator.map { i =>
         val state = all(i)
-        val nw = LocalBacktest.finalNetWorth(ticker, dates, closes,
+        val nw = LocalBacktest.finalNetWorth(s.ticker, dates, s.closes,
           mkStrategy(state.toSeq), initialAmount)
-        (ticker, state, nw)
+        (s.ticker, state, nw)
       }
     }.toDF("ticker", "state", "net_worth")
   }
-
-
 
   /** Best state per ticker — `max_by` argmax (reference optimize.py:227). */
   def best(evaluated: DataFrame): DataFrame =
@@ -224,7 +137,7 @@ object GridSearch {
   /** The reference's `_find_common_stocks` composition
     * (optimize.py:67-99): find the most-talked-about tickers in a
     * documents frame, load their bars, and optimize the strategy for
-    * each. Its constituent pieces (TextPipeline.topTickerMentions, the
+    * each. Its constituent pieces (TextPipeline.mostCommonTickers, the
     * grid evaluator) have been in place since round 1; the orchestrating
     * wrapper was absent because the reference binds it to two external
     * connectors (praw for the documents, yfinance for the bars).
@@ -242,15 +155,15 @@ object GridSearch {
   def findCommonStocks(docs: DataFrame, textCol: String,
       tickers: DataFrame, tickerCol: String, blacklist: Seq[String], k: Int,
       loadBars: Seq[String] => DataFrame,
-      mkStrategy: Seq[Double] => LocalStrategy, initialAmount: Double,
+      mkStrategy: Seq[Double] => StepStrategy, initialAmount: Double,
       ranges: Seq[(Double, Double, Double)],
       gridChunks: Int = 1, memoTag: Option[String] = None): DataFrame = {
     // the k-row mention leaderboard is consumed twice per call (the
     // symbols collect AND the final broadcast join, whose lazy side
     // would otherwise re-run the corpus regex scan at execution) — with
     // a memoTag it is session-memoized like the grid fold below
-    val top0 = graft.text.TextPipeline.topTickerMentions(docs, textCol,
-      tickers, tickerCol, blacklist, k)
+    val top0 = graft.text.TextPipeline.mostCommonTickers(Seq(docs),
+      Seq(textCol), tickers, tickerCol, blacklist, k)
     val top = memoTag match {
       case Some(tag) => graft.ops.BuildMemo.frameKeyed(docs.sparkSession,
         s"commonstockstop|$tag") { top0 }
@@ -317,31 +230,21 @@ object SimulatedAnnealing {
     * same bars-stay-on-executors shape as GridSearch.evaluate. Returns
     * (ticker, best_state, best_net_worth).
     */
-  def evaluate(bars: DataFrame, mkStrategy: Seq[Double] => LocalStrategy,
+  def evaluate(bars: DataFrame, mkStrategy: Seq[Double] => StepStrategy,
       initialAmount: Double, ranges: Seq[(Double, Double, Double)],
       initState: Array[Double], temperature: Double = 100.0,
       iterations: Int = 100, seed: Long = 42L): DataFrame = {
     val spark = bars.sparkSession
     import spark.implicits._
-    bars
-      .select(col("ticker"), col("date").cast("timestamp"), col("close").cast("double"))
-      .as[(String, Timestamp, java.lang.Double)]
-      .groupByKey(_._1)
-      .mapGroups { (ticker, it) =>
-        // full-precision sort (getTime alone is millisecond-truncated)
-        val sorted = it.toArray.sortBy(r => graft.model.Time.epochNanos(r._2))
-        val dates = sorted.map(_._2)
-        val closes = sorted.map(r =>
-          if (r._3 == null) Double.NaN else r._3.doubleValue())
-        val (best, worth) = optimize(ticker, dates, closes, mkStrategy,
-          initialAmount, ranges, initState, temperature, iterations, seed)
-        (ticker, best, worth)
-      }
-      .toDF("ticker", "best_state", "best_net_worth")
+    TickerSeries.of(bars).map { s =>
+      val (best, worth) = optimize(s.ticker, s.dates, s.closes, mkStrategy,
+        initialAmount, ranges, initState, temperature, iterations, seed)
+      (s.ticker, best, worth)
+    }.toDF("ticker", "best_state", "best_net_worth")
   }
 
   def optimize(ticker: String, dates: Array[Timestamp], closes: Array[Double],
-      mkStrategy: Seq[Double] => LocalStrategy, initialAmount: Double,
+      mkStrategy: Seq[Double] => StepStrategy, initialAmount: Double,
       ranges: Seq[(Double, Double, Double)], initState: Array[Double],
       temperature: Double = 100.0, iterations: Int = 100,
       seed: Long = 42L): (Array[Double], Double) = {

@@ -2,19 +2,18 @@ package graft.strategy
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.model.SignalBar
-import graft.ts.TimeSeriesOps
+import graft.model.{SignalBar, Time}
 
 /** A strategy turns a long bar frame (ticker, date, close, …) into signal
   * rows. The reference's "UDF" surface is Python subclassing with an
   * imperative buy/sell loop (reference strats.py:285-291,
-  * custom_strats.py:41-62); here the signal half is vectorized,
-  * Catalyst-visible DataFrame logic and the sequential order-fill half
-  * lives once in the engine (graft.engine), not per strategy — mirroring
-  * the columnar/row-loop duality of the reference (SURVEY.md §1.3, §2.11).
+  * custom_strats.py:41-62); here a strategy only emits signals and the
+  * sequential order-fill lives once in the engine (graft.engine), not per
+  * strategy. A user strategy may be any DataFrame logic; the built-in
+  * ones are [[StepStrategy]] rules.
   */
 trait Strategy extends Serializable {
 
@@ -22,100 +21,180 @@ trait Strategy extends Serializable {
     * act on, flagged isBuy/isSell, ordered per ticker by the engine.
     */
   def signals(bars: DataFrame): Dataset[SignalBar]
+}
 
-  protected def toSignalDs(df: DataFrame): Dataset[SignalBar] = {
-    val spark = df.sparkSession
+/** One ticker's running rule state: fed that ticker's bars one at a time
+  * in date order, a missing close as NaN, it returns the signal the bar
+  * triggers. Serializable so streaming can keep it as `GroupState`.
+  */
+trait StepState extends Serializable {
+  def step(date: Timestamp, close: Double): Option[SignalBar]
+}
+
+/** A strategy written once as a per-ticker [[StepState]]. Every path runs
+  * that one rule:
+  *
+  *  - batch: `signals(bars)` steps it over each ticker's series from
+  *    [[TickerSeries.of]] (one shuffle);
+  *  - in task: the optimizer (graft.opt) steps it over one ticker's
+  *    arrays with `signals(ticker, dates, closes)`;
+  *  - streaming: graft.streaming.StreamingBacktest keeps the state in
+  *    `GroupState` between micro-batches.
+  */
+trait StepStrategy extends Strategy {
+
+  /** A fresh rule state for one ticker. */
+  def start(ticker: String): StepState
+
+  /** The rule over one ticker's date-sorted bars. */
+  def signals(ticker: String, dates: Array[Timestamp],
+      closes: Array[Double]): Array[SignalBar] = {
+    val st = start(ticker)
+    val out = Array.newBuilder[SignalBar]
+    var i = 0
+    while (i < dates.length) {
+      st.step(dates(i), closes(i)) match {
+        case Some(s) => out += s
+        case None =>
+      }
+      i += 1
+    }
+    out.result()
+  }
+
+  final def signals(bars: DataFrame): Dataset[SignalBar] = {
+    import bars.sparkSession.implicits._
+    TickerSeries.of(bars).flatMap(s => signals(s.ticker, s.dates, s.closes))
+  }
+}
+
+/** One ticker's bars as date-ordered arrays: dates as epoch nanos (exact
+  * through the encoder, where a timestamp array would keep micros) and
+  * closes with null as NaN.
+  */
+final case class TickerSeries(ticker: String, nanos: Array[Long],
+    closes: Array[Double]) {
+  def dates: Array[Timestamp] = nanos.map(Time.fromEpochNanos)
+}
+
+object TickerSeries {
+
+  /** Group a long bar frame into one series per ticker: one
+    * `groupByKey(ticker)` shuffle, then an in-task sort on the
+    * full-precision key (`getTime` alone is millisecond-truncated and
+    * would tie sub-ms bars). A ticker's history is bounded (daily bars:
+    * thousands of rows), so holding it in one task is safe; tickers are
+    * the parallel axis.
+    */
+  def of(bars: DataFrame): Dataset[TickerSeries] = {
+    val spark = bars.sparkSession
     import spark.implicits._
-    df.select(col("ticker"), col("date").cast("timestamp").as("date"),
-        col("close").cast("double").as("close"),
-        col("isBuy").as("isBuy"), col("isSell").as("isSell"))
-      .as[SignalBar]
+    bars.select(col("ticker"), col("date").cast("timestamp"),
+        col("close").cast("double"))
+      .as[(String, Timestamp, java.lang.Double)]
+      .groupByKey(_._1)
+      .mapGroups { (ticker, it) =>
+        val rows = it.toArray.sortBy(r => Time.epochNanos(r._2))
+        TickerSeries(ticker, rows.map(r => Time.epochNanos(r._2)),
+          rows.map(r => if (r._3 == null) Double.NaN else r._3.doubleValue))
+      }
   }
 }
 
 /** Moving-average crossover (reference custom_strats.py:7-62): buy when
   * the fast SMA edge-crosses above the lagging SMA, sell on the downward
-  * edge; sells before the first buy are skipped by the engine fold.
+  * edge; sells are honored only strictly after the first buy (by date),
+  * so a ticker that never buys never trades.
   *
-  * Pandas parity notes: `NaN > NaN` is False in pandas so the crossover
-  * flag coalesces nulls to false; `cross != cross.shift(1)` is True on the
-  * first row because `False != NaN` → True, matched here by the null-safe
-  * negated `<=>` (SURVEY.md §2.2 P8).
+  * Pandas parity: `rolling(n).mean()` is missing until n closes fill the
+  * window and whenever one of them is missing; `NaN > NaN` is False, so a
+  * missing mean means "no cross"; `cross != cross.shift(1)` is True on
+  * the first row (`False != NaN`), so the first bar is always an edge.
+  * The mean sums the window oldest first from 0.0 and divides once, the
+  * order in which Spark's sliding window frame aggregates, so the values
+  * equal a `rowsBetween(-(n-1), 0)` window average bit for bit.
   */
-final case class MACross(fast: Int, lagging: Int) extends Strategy {
-  def signals(bars: DataFrame): Dataset[SignalBar] = {
-    val w = TimeSeriesOps.keyed()
-    val fastMa = TimeSeriesOps.rollingMean(col("close"), fast, w)
-    val lagMa = TimeSeriesOps.rollingMean(col("close"), lagging, w)
-    val withCross = bars
-      .withColumn("cross", coalesce(fastMa > lagMa, lit(false)))
-    val edge = !(col("cross") <=> lag(col("cross"), 1).over(w))
-    val flagged = withCross
-      .withColumn("isBuy", col("cross") && edge)
-      .withColumn("isSell", !col("cross") && edge)
-      .filter(col("isBuy") || col("isSell"))
-    // Sells are only honored strictly after the first buy signal, and no
-    // buys at all means no trades (custom_strats.py:50-62) — expressed
-    // vectorized so the engine fold stays strategy-agnostic.
-    val firstBuy = min(when(col("isBuy"), col("date")))
-      .over(org.apache.spark.sql.expressions.Window.partitionBy("ticker"))
-    val honored = flagged
-      .withColumn("__firstBuy", firstBuy)
-      .filter(col("isBuy") ||
-        (col("__firstBuy").isNotNull && col("date") > col("__firstBuy")))
-      .drop("__firstBuy")
-    toSignalDs(honored)
+final case class MACross(fast: Int, lagging: Int) extends StepStrategy {
+  require(fast >= 1 && lagging >= 1,
+    s"window widths must be >= 1, got fast=$fast lagging=$lagging")
+
+  def start(ticker: String): StepState = new MACross.State(ticker, fast, lagging)
+}
+
+object MACross {
+
+  @SerialVersionUID(1L)
+  final class State(ticker: String, fast: Int, lagging: Int) extends StepState {
+    private val keep = math.max(fast, lagging)
+    // each close is written at slot and slot + keep, so the last n closes
+    // are always one contiguous run ending at slot + keep
+    private val ring = new Array[Double](2 * keep)
+    private var bars = 0L
+    private var prevCross = false
+    private var firstBuyNanos = Long.MaxValue
+
+    private def mean(n: Int, newest: Int): Double =
+      if (bars < n) Double.NaN
+      else {
+        var s = 0.0
+        var j = newest - n + 1
+        while (j <= newest) { s += ring(j); j += 1 }
+        s / n
+      }
+
+    def step(date: Timestamp, close: Double): Option[SignalBar] = {
+      val slot = (bars % keep).toInt
+      ring(slot) = close
+      ring(slot + keep) = close
+      bars += 1
+      // a NaN close makes every mean over it NaN, and NaN > x is false
+      val cross = mean(fast, slot + keep) > mean(lagging, slot + keep)
+      val edge = bars == 1 || cross != prevCross
+      prevCross = cross
+      if (!edge) None
+      else {
+        val ns = Time.epochNanos(date)
+        if (cross) {
+          firstBuyNanos = math.min(firstBuyNanos, ns)
+          Some(SignalBar(ticker, date, close, isBuy = true, isSell = false))
+        } else if (ns > firstBuyNanos)
+          Some(SignalBar(ticker, date, close, isBuy = false, isSell = true))
+        else None
+      }
+    }
   }
 }
 
 /** Threshold strategy (reference custom_strats.py:65-101): buy the first
   * bar; then sell when close ≥ anchor × sellMult and buy back when close ≤
-  * anchor × buyMult, where the anchor is the close of the *last trade row*
-  * — a self-referencing state machine (SURVEY.md §7.4 quirk 10) that no
-  * window can express, so signals come from a per-ticker sequential fold.
-  * Scale note: the fold is per-ticker; tickers parallelize across the
-  * cluster and each ticker's history sorts in executor memory.
+  * anchor × buyMult, alternating, where the anchor is the close of the
+  * last trade row (SURVEY.md §7.4 quirk 10). A NaN anchor (a null-led
+  * ticker) silences every later comparison, as in pandas.
   */
 final case class TenPercent(sellMult: Double = 1.05, buyMult: Double = 0.99)
-    extends Strategy {
-  def signals(bars: DataFrame): Dataset[SignalBar] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val slim = bars.select(col("ticker"),
-        col("date").cast("timestamp").as("date"),
-        col("close").cast("double").as("close"))
-      .as[(String, Timestamp, java.lang.Double)]
-    val sm = sellMult
-    val bm = buyMult
-    slim.groupByKey(_._1).flatMapGroups { (ticker, it) =>
-      // full-precision key (graft.model.Time)
-      val rows = it.toArray.sortInPlaceBy(r => graft.model.Time.epochNanos(r._2))
-      if (rows.isEmpty) Iterator.empty
+    extends StepStrategy {
+  def start(ticker: String): StepState =
+    new TenPercent.State(ticker, sellMult, buyMult)
+}
+
+object TenPercent {
+
+  @SerialVersionUID(1L)
+  final class State(ticker: String, sellMult: Double, buyMult: Double)
+      extends StepState {
+    private var started = false
+    private var anchor = Double.NaN
+    private var lastMoveSell = false
+
+    def step(date: Timestamp, close: Double): Option[SignalBar] = {
+      val sell = started && !lastMoveSell && close >= anchor * sellMult
+      val buy = !started || (lastMoveSell && close <= anchor * buyMult)
+      if (!buy && !sell) None
       else {
-        val out = Vector.newBuilder[SignalBar]
-        def closeAt(i: Int): Double = {
-          val c = rows(i)._3
-          if (c == null) Double.NaN else c.doubleValue()
-        }
-        // buy the first bar unconditionally (custom_strats.py:88)
-        out += SignalBar(ticker, rows(0)._2, closeAt(0), isBuy = true, isSell = false)
-        var anchorIdx = 0
-        var lastMoveSell = false
-        var i = 1
-        while (i < rows.length) {
-          val v = closeAt(i)
-          if (v >= closeAt(anchorIdx) * sm && !lastMoveSell) {
-            out += SignalBar(ticker, rows(i)._2, v, isBuy = false, isSell = true)
-            anchorIdx = i
-            lastMoveSell = true
-          } else if (v <= closeAt(anchorIdx) * bm && lastMoveSell) {
-            out += SignalBar(ticker, rows(i)._2, v, isBuy = true, isSell = false)
-            anchorIdx = i
-            lastMoveSell = false
-          }
-          i += 1
-        }
-        out.result().iterator
+        started = true
+        anchor = close
+        lastMoveSell = sell
+        Some(SignalBar(ticker, date, close, isBuy = buy, isSell = sell))
       }
     }
   }

@@ -8,18 +8,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.engine.TradingSession
 import graft.model.{SignalBar, Time, TradeDay}
+import graft.strategy.{MACross, StepState, StepStrategy, TenPercent}
 
-/** Structured-Streaming mode (SURVEY.md §2.10): the same TradingSession
-  * state machine the batch fold uses, held as per-ticker `GroupState` in
-  * `flatMapGroupsWithState`. The reference's trading loop is an
-  * event-time-ordered single pass with evolving state — exactly this
-  * shape.
+/** Structured-Streaming mode (SURVEY.md §2.10): the batch engine's two
+  * per-ticker stages held as `GroupState` in `flatMapGroupsWithState` —
+  * the built-in strategies' rule state ([[maCrossSignals]],
+  * [[tenPercentSignals]]) and the TradingSession fold ([[foldStream]]).
+  * Neither has a streaming copy of its own: both step the same code the
+  * batch and in-task paths run.
+  * The reference's trading loop is an event-time-ordered single pass
+  * with evolving state — exactly this shape.
   *
   * Ordering contract: bars must arrive in event-time order per ticker
   * *across* batches (daily bars, no late data — the reference's world,
   * custom_strats.py:56-62). Within a batch rows are sorted here. Late
-  * rows older than the session's last processed bar are dropped and
-  * counted, not applied retroactively.
+  * rows older than the ticker's last processed bar are dropped, not
+  * applied retroactively.
   */
 object StreamingBacktest {
 
@@ -97,166 +101,66 @@ object StreamingBacktest {
     }
   }
 
-  /** Per-ticker streaming state for [[maCrossSignals]]: the rolling close
-    * window (one slot per BAR, null closes occupy a slot without counting
-    * — pandas `rolling(n).mean()` min_periods semantics), the previous
-    * crossover flag for edge detection, and the first-buy gate.
+  /** Per-ticker streaming state for [[ruleSignals]]: the strategy's own
+    * rule state plus the last processed event time. Old checkpoints hold
+    * the per-rule state classes this one replaced; those classes are
+    * gone, so restoring such a checkpoint fails on deserialization
+    * (ClassNotFoundException) instead of restoring a wrong state.
     */
   @SerialVersionUID(1L)
-  final class MaCrossState(val lagging: Int) extends Serializable {
-    // ring of the last `lagging` closes by row (null close = None slot)
-    var closes: Vector[Option[Double]] = Vector.empty
-    var prevCross: Option[Boolean] = None
-    var firstBuyNanos: Option[Long] = None
+  final class RuleSlot(val rule: StepState) extends Serializable {
     var lastTime: Long = Long.MinValue
   }
 
-  implicit private val maCrossStateEnc: Encoder[MaCrossState] =
-    Encoders.javaSerialization[MaCrossState]
+  implicit private val ruleSlotEnc: Encoder[RuleSlot] =
+    Encoders.javaSerialization[RuleSlot]
 
-  /** Streaming twin of [[graft.strategy.MACross]].signals — the rolling
-    * windows the batch strategy declares (no time bound, so Structured
-    * Streaming cannot run them as window functions) re-expressed as
-    * per-ticker `flatMapGroupsWithState`. Bit-exact with the batch
-    * operator on in-order bars: the rolling mean sums the frame's closes
-    * in ascending row order and divides once (exactly how WindowExec
-    * re-aggregates a sliding frame), requires `n` non-null closes among
-    * the last `n` rows (the min_periods guard), the crossover edge fires
-    * on the first bar (null-safe inequality against a missing previous
-    * flag), and sells are honored only strictly after the first buy —
-    * StreamingSignalsSpec pins row parity with `MACross(fast, lagging)
-    * .signals` across micro-batch splits. Same ordering contract as
-    * [[foldStream]]: per-ticker event-time order across batches; late
-    * rows are dropped, not applied retroactively.
+  /** A built-in strategy's signals over a bar stream: the same per-ticker
+    * rule the batch and in-task paths run, with its state kept in
+    * `GroupState` between micro-batches, so a stream yields the batch
+    * signals row for row however it is split. Each batch is sorted per
+    * ticker; rows older than the ticker's last processed bar are dropped
+    * (the [[foldStream]] ordering contract). Null closes step as NaN.
     */
+  private def ruleSignals(bars: DataFrame,
+      strategy: StepStrategy): Dataset[SignalBar] = {
+    val spark = bars.sparkSession
+    import spark.implicits._
+    val slim = bars.select(col("ticker"),
+        col("date").cast("timestamp").as("date"),
+        col("close").cast("double").as("close"))
+      .as[(String, Timestamp, Option[Double])]
+    slim.groupByKey(_._1).flatMapGroupsWithState(
+      OutputMode.Append, GroupStateTimeout.NoTimeout) {
+      (ticker: String, rows: Iterator[(String, Timestamp, Option[Double])],
+          state: GroupState[RuleSlot]) =>
+        val st = state.getOption.getOrElse(new RuleSlot(strategy.start(ticker)))
+        val batch = rows.toArray
+        scala.util.Sorting.stableSort(batch,
+          (a: (String, Timestamp, Option[Double]),
+              b: (String, Timestamp, Option[Double])) =>
+            Time.epochNanos(a._2) < Time.epochNanos(b._2))
+        val out = batch.iterator.flatMap { case (_, date, close) =>
+          if (Time.epochNanos(date) < st.lastTime) None
+          else {
+            st.lastTime = Time.epochNanos(date)
+            st.rule.step(date, close.getOrElse(Double.NaN))
+          }
+        }.toVector
+        state.update(st)
+        out.iterator
+    }
+  }
+
+  /** [[graft.strategy.MACross]] over a bar stream. */
   def maCrossSignals(bars: DataFrame, fast: Int,
-      lagging: Int): Dataset[SignalBar] = {
-    require(fast >= 1 && lagging >= 1,
-      s"window widths must be >= 1, got fast=$fast lagging=$lagging")
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val slim = bars.select(col("ticker"),
-        col("date").cast("timestamp").as("date"),
-        col("close").cast("double").as("close"))
-      .as[(String, Timestamp, Option[Double])]
-    val keep = math.max(fast, lagging)
-    slim.groupByKey(_._1).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (ticker: String, rows: Iterator[(String, Timestamp, Option[Double])],
-          state: GroupState[MaCrossState]) =>
-        val st = state.getOption.getOrElse(new MaCrossState(keep))
-        // frame mean over the last n ROW slots: null iff any slot of the
-        // last n is missing/None (count(c) over frame === n); the sum
-        // folds ascending from 0.0, one divide — WindowExec's order
-        def rollMean(n: Int): Option[Double] = {
-          if (st.closes.length < n) None
-          else {
-            val frame = st.closes.takeRight(n)
-            if (frame.exists(_.isEmpty)) None
-            else Some(frame.foldLeft(0.0)((a, v) => a + v.get) / n)
-          }
-        }
-        val batch = rows.toArray
-        scala.util.Sorting.stableSort(batch,
-          (a: (String, Timestamp, Option[Double]),
-              b: (String, Timestamp, Option[Double])) =>
-            Time.epochNanos(a._2) < Time.epochNanos(b._2))
-        val out = batch.iterator.flatMap { case (_, date, close) =>
-          if (Time.epochNanos(date) < st.lastTime) None
-          else {
-            st.lastTime = Time.epochNanos(date)
-            st.closes = (st.closes :+ close).takeRight(keep)
-            val cross = (for (f <- rollMean(fast); l <- rollMean(lagging))
-              yield f > l).getOrElse(false)
-            val edge = !st.prevCross.contains(cross)
-            st.prevCross = Some(cross)
-            val isBuy = cross && edge
-            val isSell = !cross && edge
-            if (isBuy && st.firstBuyNanos.isEmpty)
-              st.firstBuyNanos = Some(Time.epochNanos(date))
-            val honored = isBuy ||
-              (isSell && st.firstBuyNanos.exists(Time.epochNanos(date) > _))
-            if (honored)
-              // a flagged row's close decodes into SignalBar.close like the
-              // batch path (null close on a signal row fails there too)
-              Some(SignalBar(ticker, date, close.get, isBuy, isSell))
-            else None
-          }
-        }.toVector
-        state.update(st)
-        out.iterator
-    }
-  }
+      lagging: Int): Dataset[SignalBar] =
+    ruleSignals(bars, MACross(fast, lagging))
 
-  /** Per-ticker streaming state for [[tenPercentSignals]]: the anchor
-    * close (the close of the last emitted trade row), the direction of
-    * that last move, and whether the unconditional first-bar buy fired.
-    */
-  @SerialVersionUID(1L)
-  final class TenPercentState extends Serializable {
-    var started: Boolean = false
-    var anchorClose: Double = Double.NaN
-    var lastMoveSell: Boolean = false
-    var lastTime: Long = Long.MinValue
-  }
-
-  implicit private val tenPercentStateEnc: Encoder[TenPercentState] =
-    Encoders.javaSerialization[TenPercentState]
-
-  /** Streaming twin of [[graft.strategy.TenPercent]].signals. The batch
-    * strategy is already a per-ticker sequential fold (the anchor is the
-    * close of the last trade row — a self-referencing state machine no
-    * window expresses), so the streaming form just persists that fold's
-    * three scalars as `GroupState`: buy the first bar unconditionally,
-    * then sell at anchor × sellMult, buy back at anchor × buyMult,
-    * alternating. Null closes carry NaN exactly like the batch fold (a
-    * NaN anchor silences every later comparison). Same ordering/late-row
-    * contract as [[foldStream]]; parity across micro-batch splits pinned
-    * by StreamingSignalsSpec.
-    */
+  /** [[graft.strategy.TenPercent]] over a bar stream. */
   def tenPercentSignals(bars: DataFrame, sellMult: Double = 1.05,
-      buyMult: Double = 0.99): Dataset[SignalBar] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val slim = bars.select(col("ticker"),
-        col("date").cast("timestamp").as("date"),
-        col("close").cast("double").as("close"))
-      .as[(String, Timestamp, Option[Double])]
-    slim.groupByKey(_._1).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (ticker: String, rows: Iterator[(String, Timestamp, Option[Double])],
-          state: GroupState[TenPercentState]) =>
-        val st = state.getOption.getOrElse(new TenPercentState)
-        val batch = rows.toArray
-        scala.util.Sorting.stableSort(batch,
-          (a: (String, Timestamp, Option[Double]),
-              b: (String, Timestamp, Option[Double])) =>
-            Time.epochNanos(a._2) < Time.epochNanos(b._2))
-        val out = batch.iterator.flatMap { case (_, date, close) =>
-          if (Time.epochNanos(date) < st.lastTime) None
-          else {
-            st.lastTime = Time.epochNanos(date)
-            val v = close.getOrElse(Double.NaN)
-            if (!st.started) {
-              st.started = true
-              st.anchorClose = v
-              st.lastMoveSell = false
-              Some(SignalBar(ticker, date, v, isBuy = true, isSell = false))
-            } else if (v >= st.anchorClose * sellMult && !st.lastMoveSell) {
-              st.anchorClose = v
-              st.lastMoveSell = true
-              Some(SignalBar(ticker, date, v, isBuy = false, isSell = true))
-            } else if (v <= st.anchorClose * buyMult && st.lastMoveSell) {
-              st.anchorClose = v
-              st.lastMoveSell = false
-              Some(SignalBar(ticker, date, v, isBuy = true, isSell = false))
-            } else None
-          }
-        }.toVector
-        state.update(st)
-        out.iterator
-    }
-  }
+      buyMult: Double = 0.99): Dataset[SignalBar] =
+    ruleSignals(bars, TenPercent(sellMult, buyMult))
 
   /** Watermarked sliding-window aggregation over an event stream — the
     * streaming analogue of the rolling-indicator family (SURVEY.md §2.6):

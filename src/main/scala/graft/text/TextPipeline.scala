@@ -44,27 +44,6 @@ object TextPipeline {
       filtered("symbol") === shortStops("word"), "left_anti")
   }
 
-  /** Top-k token frequency over documents (reference common_stock.py:186-195):
-    * explode extracted tokens, keep tokens whose lowercase form is a known
-    * ticker (broadcast semi-join) and not blacklisted (anti-join / NOT IN),
-    * count, deterministic top-k (count desc, token asc tiebreak — the
-    * reference's Counter breaks ties by insertion order, SURVEY.md A4).
-    */
-  def topTickerMentions(docs: DataFrame, textCol: String,
-      tickers: DataFrame, tickerCol: String, blacklist: Seq[String],
-      k: Int): DataFrame = {
-    val tokens = docs
-      .select(explode(extractTickerTokens(col(textCol))).as("token"))
-      .withColumn("token_lc", lower(col("token")))
-      .filter(!col("token_lc").isin(blacklist: _*))
-    val dim = tickers.select(lower(col(tickerCol)).as("token_lc")).distinct()
-    tokens.join(broadcast(dim), Seq("token_lc"), "left_semi")
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("token"))
-      .limit(k)
-  }
-
   /** Generic whitespace tokenization with lowercase normalization. */
   def tokenize(c: Column): Column =
     filter(split(lower(c), "\\s+"), t => length(t) > 0)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.api.Backtest
-import graft.opt.LocalMACross
 import graft.sources.Sources
 import graft.strategy.MACross
 import graft.text.TextPipeline
@@ -40,7 +39,7 @@ class ApiFacadeSpec extends SparkTestBase {
 
   test("facade optimize finds the reference grid optimum") {
     val bt = new Backtest(5000.0, MACross(36, 40), aapl10y)
-    val best = bt.optimize(st => LocalMACross(st(0).toInt, st(1).toInt),
+    val best = bt.optimize(st => MACross(st(0).toInt, st(1).toInt),
       Seq((30, 40, 2), (40, 50, 5))).collect()(0)
     assert(best.getAs[Seq[Double]]("best_state") === Seq(36.0, 40.0))
     assert(best.getAs[Double]("best_net_worth") === 1283666.449897766)
@@ -49,7 +48,7 @@ class ApiFacadeSpec extends SparkTestBase {
   test("facade optimize dispatches sim_anneal, matching the local chain") {
     val bt = new Backtest(5000.0, MACross(36, 40), aapl10y)
     val row = bt.optimize(
-      st => LocalMACross(math.max(1, st(0).toInt), math.max(1, st(1).toInt)),
+      st => MACross(math.max(1, st(0).toInt), math.max(1, st(1).toInt)),
       Seq((30, 40, 2), (40, 50, 5)), optType = "sim_anneal",
       initState = Array(30.0, 45.0), iterations = 30, seed = 7L).collect()(0)
     // distributed per-ticker chain must equal the driver-local chain
@@ -57,13 +56,13 @@ class ApiFacadeSpec extends SparkTestBase {
       .orderBy("date").collect()
     val (state, cost) = graft.opt.SimulatedAnnealing.optimize("aapl",
       rows.map(_.getTimestamp(0)), rows.map(_.getDouble(1)),
-      st => LocalMACross(math.max(1, st(0).toInt), math.max(1, st(1).toInt)),
+      st => MACross(math.max(1, st(0).toInt), math.max(1, st(1).toInt)),
       5000.0, Seq((30, 40, 2), (40, 50, 5)), Array(30.0, 45.0),
       iterations = 30, seed = 7L)
     assert(row.getAs[Seq[Double]]("best_state") === state.toSeq)
     assert(row.getAs[Double]("best_net_worth") === cost)
     intercept[IllegalArgumentException] {
-      bt.optimize(st => LocalMACross(1, 2), Seq((1, 2, 1)), optType = "nope")
+      bt.optimize(st => MACross(1, 2), Seq((1, 2, 1)), optType = "nope")
     }
   }
 
@@ -78,7 +77,7 @@ class ApiFacadeSpec extends SparkTestBase {
     val bt = new Backtest(5000.0, MACross(36, 40), bars)
     val best = bt.optimizeCommonStocks(Seq(posts), Seq("title", "selftext"),
       dims, "symbol", blacklist = Nil, k = 1,
-      st => LocalMACross(st(0).toInt, st(1).toInt),
+      st => MACross(st(0).toInt, st(1).toInt),
       Seq((30, 40, 2), (40, 50, 5))).collect()
     // only the top-1 mentioned ticker survives the semi-join
     assert(best.map(_.getString(0)).toList === List("AAPL"))

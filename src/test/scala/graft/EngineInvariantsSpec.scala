@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.engine.BacktestEngine
-import graft.opt.{GridSearch, LocalMACross, LocalTenPercent}
+import graft.opt.GridSearch
 import graft.sources.Sources
 import graft.strategy.{MACross, TenPercent}
 
@@ -30,7 +30,7 @@ class EngineInvariantsSpec extends SparkTestBase {
       BacktestEngine.run(bars, MACross(5, 20), 10000.0))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val localNw = GridSearch.evaluate(bars,
-      st => LocalMACross(st(0).toInt, st(1).toInt), 10000.0,
+      st => MACross(st(0).toInt, st(1).toInt), 10000.0,
       Seq((5, 6, 1), (20, 21, 1)))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(engineNw.keySet === localNw.keySet)
@@ -43,7 +43,7 @@ class EngineInvariantsSpec extends SparkTestBase {
     val engineNw = BacktestEngine.finalNetWorth(
       BacktestEngine.run(bars, TenPercent(), 5000.0))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val localNw = GridSearch.evaluate(bars, _ => LocalTenPercent(), 5000.0,
+    val localNw = GridSearch.evaluate(bars, _ => TenPercent(), 5000.0,
       Seq((1, 2, 1)))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     engineNw.foreach { case (t, v) =>

@@ -1,7 +1,8 @@
 package graft
 
-import graft.opt.{GridSearch, LocalMACross, LocalTenPercent, SimulatedAnnealing}
+import graft.opt.{GridSearch, SimulatedAnnealing}
 import graft.sources.Sources
+import graft.strategy.{MACross, TenPercent}
 import graft.ts.TimeSeriesOps
 
 /** Grid-search golden from the reference optimizer run offline
@@ -23,7 +24,7 @@ class OptimizerSpec extends SparkTestBase {
 
   test("distributed grid search reproduces reference best state") {
     val evaluated = GridSearch.evaluate(aapl10y,
-      st => LocalMACross(st(0).toInt, st(1).toInt), 5000.0,
+      st => MACross(st(0).toInt, st(1).toInt), 5000.0,
       Seq((30, 40, 2), (40, 50, 5)))
     assert(evaluated.count() === 10) // 5 x 2 grid
     val bestRow = GridSearch.best(evaluated).collect()(0)
@@ -33,7 +34,7 @@ class OptimizerSpec extends SparkTestBase {
 
   test("grid sharding (gridChunks) evaluates the identical grid") {
     val evaluated = GridSearch.evaluate(aapl10y,
-      st => LocalMACross(st(0).toInt, st(1).toInt), 5000.0,
+      st => MACross(st(0).toInt, st(1).toInt), 5000.0,
       Seq((30, 40, 2), (40, 50, 5)), gridChunks = 4)
     assert(evaluated.count() === 10)
     val bestRow = GridSearch.best(evaluated).collect()(0)
@@ -58,7 +59,7 @@ class OptimizerSpec extends SparkTestBase {
         .reduce(_ unionByName _)
     val out = GridSearch.findCommonStocks(docs, "text", tickers, "symbol",
       blacklist = Seq("fomo"), k = 2, loadBars,
-      st => LocalMACross(st(0).toInt, st(1).toInt), 5000.0,
+      st => MACross(st(0).toInt, st(1).toInt), 5000.0,
       Seq((30, 40, 2), (40, 50, 5))).collect()
       .map(r => (r.getString(0), r.getLong(1),
         r.getAs[Seq[Double]]("best_state"),
@@ -73,7 +74,7 @@ class OptimizerSpec extends SparkTestBase {
 
   test("local evaluator agrees with distributed engine (ten percent)") {
     val evaluated = GridSearch.evaluate(aapl10y,
-      _ => LocalTenPercent(), 5000.0, Seq((1, 2, 1)))
+      _ => TenPercent(), 5000.0, Seq((1, 2, 1)))
     val nw = evaluated.collect()(0).getDouble(2)
     assert(nw === 5640.54146194458) // reference golden (ref_metrics_golden)
   }
@@ -85,7 +86,7 @@ class OptimizerSpec extends SparkTestBase {
     val dates = rows.map(_.getTimestamp(0))
     val closes = rows.map(_.getDouble(1))
     val (state, cost) = SimulatedAnnealing.optimize("AAPL", dates, closes,
-      st => LocalMACross(math.max(1, st(0).toInt), math.max(1, st(1).toInt)),
+      st => MACross(math.max(1, st(0).toInt), math.max(1, st(1).toInt)),
       5000.0, Seq((30, 40, 2), (40, 50, 5)), Array(30.0, 45.0),
       iterations = 30, seed = 7L)
     assert(cost >= 5000.0) // found something profitable, deterministic seed

@@ -6,7 +6,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.engine.BacktestEngine
-import graft.opt.{LocalBacktest, LocalMACross, LocalTenPercent}
+import graft.opt.LocalBacktest
+import graft.strategy.{MACross, TenPercent}
 
 /** Property tests (SURVEY.md §5 implication 2): on arbitrary price paths
   * the distributed-signal semantics must agree with the task-local
@@ -37,13 +38,50 @@ class PropertySpec extends SparkTestBase {
     samples(15).foreach { closes =>
       val bars = toBars(closes).toDF("ticker", "date", "close")
       val engineNw = BacktestEngine.finalNetWorth(
-        BacktestEngine.run(bars, graft.strategy.MACross(5, 15), 1000.0))
+        BacktestEngine.run(bars, MACross(5, 15), 1000.0))
         .collect()(0).getDouble(1)
       val arr = toBars(closes)
       val localNw = LocalBacktest.finalNetWorth("t",
         arr.map(_._2).toArray, arr.map(_._3).toArray,
-        LocalMACross(5, 15), 1000.0)
+        MACross(5, 15), 1000.0)
       assert(engineNw === localNw, s"series head ${closes.take(5)}")
+    }
+  }
+
+  /** The pandas `rolling(n).mean()` crossover as Spark window
+    * expressions: an oracle for the MACross rule written independently
+    * of it (null-free paths, where the two formulations must agree).
+    */
+  private def windowMACross(bars: org.apache.spark.sql.DataFrame, fast: Int,
+      lagging: Int): Seq[(Timestamp, Double, Boolean)] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val w = graft.ts.TimeSeriesOps.keyed()
+    val cross = coalesce(
+      graft.ts.TimeSeriesOps.rollingMean(col("close"), fast, w) >
+        graft.ts.TimeSeriesOps.rollingMean(col("close"), lagging, w),
+      lit(false))
+    val edge = !(col("cross") <=> lag(col("cross"), 1).over(w))
+    bars.withColumn("cross", cross)
+      .withColumn("isBuy", col("cross") && edge)
+      .withColumn("isSell", !col("cross") && edge)
+      .withColumn("firstBuy", min(when(col("isBuy"), col("date")))
+        .over(Window.partitionBy("ticker")))
+      .filter(col("isBuy") ||
+        (col("isSell") && col("date") > col("firstBuy")))
+      .orderBy("date").collect()
+      .map(r => (r.getAs[Timestamp]("date"), r.getAs[Double]("close"),
+        r.getAs[Boolean]("isBuy"))).toSeq
+  }
+
+  test("MACross rule equals the rolling-window formulation on random paths") {
+    samples(8).zip(Seq((5, 15), (2, 4), (3, 3), (15, 5), (1, 2), (7, 20),
+        (4, 9), (2, 30))).foreach { case (closes, (fast, lagging)) =>
+      val arr = toBars(closes)
+      val rule = MACross(fast, lagging).signals("t", arr.map(_._2).toArray,
+        arr.map(_._3).toArray).map(s => (s.date, s.close, s.isBuy)).toSeq
+      assert(rule === windowMACross(arr.toDF("ticker", "date", "close"),
+        fast, lagging), s"MACross($fast, $lagging) on ${closes.take(5)}")
     }
   }
 
@@ -138,12 +176,12 @@ class PropertySpec extends SparkTestBase {
     samples(10).foreach { closes =>
       val bars = toBars(closes).toDF("ticker", "date", "close")
       val engineNw = BacktestEngine.finalNetWorth(
-        BacktestEngine.run(bars, graft.strategy.TenPercent(), 500.0))
+        BacktestEngine.run(bars, TenPercent(), 500.0))
         .collect()(0).getDouble(1)
       val arr = toBars(closes)
       val localNw = LocalBacktest.finalNetWorth("t",
         arr.map(_._2).toArray, arr.map(_._3).toArray,
-        LocalTenPercent(), 500.0)
+        TenPercent(), 500.0)
       assert(engineNw === localNw, s"series head ${closes.take(5)}")
     }
   }

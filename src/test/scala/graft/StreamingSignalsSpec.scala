@@ -2,17 +2,20 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.engine.BacktestEngine
-import graft.model.Bar
+import graft.model.{Bar, SignalBar}
 import graft.strategy.MACross
 import graft.streaming.StreamingBacktest
 
-/** The streaming MACross signal operator must be row-for-row equal to
-  * the batch window formulation on in-order bars — including across
-  * micro-batch splits that land mid-window — and the composed streaming
+/** The streaming signal operators must be row-for-row equal to the
+  * batch strategies on in-order bars — including across micro-batch
+  * splits that land mid-window, which is what the rule state kept in
+  * `GroupState` has to carry — and the composed streaming
   * backtest (bars → maCrossSignals → foldStream) must reproduce the
   * batch engine's trade table. This is the end-to-end streaming demo
   * the README documents.
@@ -142,6 +145,44 @@ class StreamingSignalsSpec extends SparkTestBase {
       assert(Option(s.get(2)).map(_.asInstanceOf[Double]) === b.buy_shares)
       assert(Option(s.get(3)).map(_.asInstanceOf[Double]) === b.sell_shares)
       assert(Option(s.get(4)).map(_.asInstanceOf[Double]) === b.shares_owned)
+    }
+  }
+
+  test("a checkpoint holding the old per-rule state classes fails on restore") {
+    implicit val sc = spark.sqlContext
+    // checkpoints/rule-state-v1: one micro-batch of ticker A (six bars)
+    // through maCrossSignals(2, 4) and tenPercentSignals(), written when
+    // each rule had a streaming state class of its own
+    val signals = Seq[(String, DataFrame => Dataset[SignalBar])](
+      "macross" -> (df => StreamingBacktest.maCrossSignals(df, 2, 4)),
+      "tenpercent" -> (df => StreamingBacktest.tenPercentSignals(df)))
+    signals.foreach { case (name, run) =>
+      val src = java.nio.file.Paths.get(
+        getClass.getResource(s"/checkpoints/rule-state-v1/$name").toURI)
+      val ckpt = java.nio.file.Files.createTempDirectory("old_ckpt")
+      java.nio.file.Files.walk(src).forEach { p =>
+        val to = ckpt.resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p))
+          java.nio.file.Files.createDirectories(to)
+        else java.nio.file.Files.copy(p, to)
+      }
+      val input = MemoryStream[Bar]
+      input.addData(bar("A", 1, 10.0)) // offset 0: the committed batch
+      input.addData(bar("A", 7, 11.0)) // offset 1: needs A's old state
+      // the memory sink cannot restart from a checkpoint; count instead
+      val emitted = new java.util.concurrent.atomic.AtomicLong
+      val query = run(input.toDF()).writeStream
+        .foreachBatch { (b: Dataset[SignalBar], _: Long) =>
+          emitted.addAndGet(b.count()); ()
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      val e = intercept[StreamingQueryException](query.processAllAvailable())
+      query.stop()
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(_.isInstanceOf[ClassNotFoundException]),
+        s"$name: ${e.getMessage}")
+      assert(emitted.get === 0L, s"$name restored and emitted rows")
     }
   }
 }

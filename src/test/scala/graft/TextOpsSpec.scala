@@ -32,8 +32,8 @@ class TextOpsSpec extends SparkTestBase {
       "TSLA and AAPL, avoid FOMO",
       "GME squeeze FOMO FOMO").toDF("text")
     val tickers = Seq("aapl", "tsla", "gme", "fomo").toDF("symbol")
-    val top = TextPipeline.topTickerMentions(docs, "text", tickers, "symbol",
-      blacklist = Seq("fomo"), k = 3).collect()
+    val top = TextPipeline.mostCommonTickers(Seq(docs), Seq("text"), tickers,
+      "symbol", blacklist = Seq("fomo"), k = 3).collect()
     assert(top.map(r => (r.getString(0), r.getLong(1))).toList ===
       List(("AAPL", 3L), ("TSLA", 2L), ("GME", 1L)))
   }
